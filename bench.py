@@ -212,6 +212,8 @@ def main() -> None:
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
     qs = entry.queries()
+    missing = sorted(set(DRIVER_GRADED) - set(qs))
+    assert not missing, f"DRIVER_GRADED names not in queries(): {missing}"
 
     def best_of(fn, runs: int) -> float:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -1246,7 +1246,11 @@ def q_stream_events_daily(spark, sf_dir):
     ev = sdf.select(F.col("ts").alias("ets"), "event_type")
     agg = windowed_agg(ev, "ets", keys=["event_type"], window="1 day", watermark="0 seconds")
 
-    from margaret_spark.streaming.sinks import read_batch_sink, write_batch
+    from margaret_spark.streaming.sinks import (
+        read_batch_sink,
+        start_stream,
+        write_batch,
+    )
 
     base = tempfile.mkdtemp(prefix="stream_daily_")
     try:
@@ -1258,14 +1262,11 @@ def q_stream_events_daily(spark, sf_dir):
         def on_batch(bdf, bid):
             write_batch(bdf.withColumn("__b", F.lit(bid)), bid, sink)
 
-        q = (
-            agg.writeStream.foreachBatch(on_batch)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        start_stream(
+            agg.writeStream.foreachBatch(on_batch).outputMode("update"),
+            os.path.join(base, "ckpt"),
+            available_now=True,
         )
-        q.awaitTermination()
         out = read_batch_sink(
             spark, sink,
             "window_start timestamp, event_type string, n long, __b long",
@@ -1316,7 +1317,11 @@ def q_stream_events_enriched(spark, sf_dir):
     )
     joined = sdf.join(cust, sdf.user_id == cust.c_custkey)
 
-    from margaret_spark.streaming.sinks import read_batch_sink, write_batch
+    from margaret_spark.streaming.sinks import (
+        read_batch_sink,
+        start_stream,
+        write_batch,
+    )
 
     base = tempfile.mkdtemp(prefix="stream_enrich_")
     try:
@@ -1331,13 +1336,11 @@ def q_stream_events_enriched(spark, sf_dir):
                 bid, sink,
             )
 
-        q = (
-            joined.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        start_stream(
+            joined.writeStream.foreachBatch(on_batch),
+            os.path.join(base, "ckpt"),
+            available_now=True,
         )
-        q.awaitTermination()
         out = read_batch_sink(spark, sink, "c_nationkey long, n long")
         return out.groupBy("c_nationkey").agg(
             F.sum("n").cast("long").alias("n_events")

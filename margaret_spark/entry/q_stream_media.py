@@ -1253,6 +1253,7 @@ def q_stream_events_sessions(spark, sf_dir):
     import tempfile
 
     from margaret_spark.streaming import session_windows
+    from margaret_spark.streaming.sinks import start_stream
 
     sdf = (
         spark.readStream.schema(_EVENTS_SCHEMA)
@@ -1278,14 +1279,11 @@ def q_stream_events_sessions(spark, sf_dir):
         ).write.mode("overwrite").parquet(out)
 
     try:
-        q = (
-            sess.writeStream.foreachBatch(on_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        start_stream(
+            sess.writeStream.foreachBatch(on_batch).outputMode("complete"),
+            os.path.join(base, "ckpt"),
+            available_now=True,
         )
-        q.awaitTermination()
         final = spark.read.parquet(out)
     finally:
         _defer_cleanup(base)

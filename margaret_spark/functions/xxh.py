@@ -20,6 +20,7 @@ the k seed folds (the JVM form recomputes it per permutation)."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -77,19 +78,36 @@ def xxh64_int(value: np.ndarray, seed) -> np.ndarray:
         return h
 
 
-def _sig_lists(values, num_hashes: int) -> list:
+def _long_row(a, column: str) -> np.ndarray:
+    """One array<long> row as int64. Arrow hands a row holding a NULL
+    element to pandas as float64 with NaN, and the int64 cast would
+    turn each NaN into -2**63 with only a warning — a fake element
+    hashed into the signature. Such rows are rejected instead; rows
+    that arrive with an integer dtype skip the check."""
+    arr = np.asarray(a)
+    if arr.dtype.kind not in "iu" and pd.isna(arr).any():
+        raise ValueError(
+            f"{column}: NULL array element in a MinHash input row; drop "
+            "NULL elements upstream (e.g. F.filter(col, lambda x: "
+            "x.isNotNull()))"
+        )
+    return arr.astype("int64", copy=False)
+
+
+def _sig_lists(values, num_hashes: int, column: str) -> list:
     """Per-row MinHash signature lists for an iterable of array<long>
     element-hash rows, vectorized over the whole batch: flatten once,
     hashLong(h, 42) once per element, fold the ``num_hashes`` INT
     seeds, segmented SIGNED min per row. NULL/empty rows yield None
-    (the JVM ``array_min`` of an empty array)."""
+    (the JVM ``array_min`` of an empty array); a NULL element inside
+    a row raises ``ValueError`` naming ``column``."""
     lens = np.fromiter(
         (0 if a is None else len(a) for a in values), dtype="int64"
     )
     if lens.sum() == 0:
         return [None] * len(lens)
     flat = np.concatenate(
-        [np.asarray(a, dtype="int64") for a in values if a is not None and len(a)]
+        [_long_row(a, column) for a in values if a is not None and len(a)]
     ).view(np.uint64)
     base = xxh64_long(flat, _SEED)  # hashLong(h, 42), once per element
     offsets = np.zeros(len(lens) + 1, dtype="int64")
@@ -131,7 +149,7 @@ def with_minhash_sigs(
     def _map(batches):
         for pdf in batches:
             out = pdf.copy()
-            out[out_col] = _sig_lists(pdf[arr_col], num_hashes)
+            out[out_col] = _sig_lists(pdf[arr_col], num_hashes, arr_col)
             yield out
 
     return df.mapInPandas(_map, schema)

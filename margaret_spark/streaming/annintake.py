@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from margaret_spark.functions.numeric import pround
 from margaret_spark.functions.vectors import l2_norm, pair_dot
 from margaret_spark.log import OffsetLog
+from margaret_spark.streaming.sinks import start_stream
 
 
 def stream_ivf_assign(
@@ -61,7 +62,7 @@ def stream_ivf_assign(
         l2_norm(F.col("cent")).alias("__centn"),
     ).localCheckpoint(eager=True)
 
-    # r11: score through the collected-matrix RANKING kernel when the
+    # score through the collected-matrix RANKING kernel when the
     # model fits the closure budget (see similarity._matrix_best) —
     # each batch vector crosses the Arrow pipe once and the winner is
     # picked inside the batch (no per-batch row_number window
@@ -116,16 +117,8 @@ def stream_ivf_assign(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_pq_assign(
@@ -169,8 +162,8 @@ def stream_pq_assign(
         "cnsq", pair_dot(F.col("cent"), F.col("cent"))
     ).localCheckpoint(eager=True)
 
-    # r11: encode through the shared PQ assignment (operators.pq
-    # _subvectors + _assign), which now routes slice scoring through
+    # encode through the shared PQ assignment (operators.pq
+    # _subvectors + _assign), which routes slice scoring through
     # the subspace-keyed matrix kernel — each slice crosses the Arrow
     # pipe once instead of once per code, the self-dot folds in
     # codegen, and __d2/the tiebreak are the identical expressions,
@@ -193,16 +186,8 @@ def stream_pq_assign(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_hash_embed(
@@ -247,16 +232,8 @@ def stream_hash_embed(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_hier_assign(
@@ -310,13 +287,5 @@ def stream_hier_assign(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)

@@ -30,7 +30,11 @@ from pyspark.sql import functions as F
 
 from margaret_spark.functions.cms import cms_sketch
 from margaret_spark.log import OffsetLog
-from margaret_spark.streaming.sinks import read_batch_sink, write_batch
+from margaret_spark.streaming.sinks import (
+    read_batch_sink,
+    start_stream,
+    write_batch,
+)
 
 
 def stream_cms(
@@ -57,16 +61,8 @@ def stream_cms(
         )
         write_batch(sk, batch_id, sink_dir)
 
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def cms_reduce(df: DataFrame) -> DataFrame:
@@ -119,16 +115,8 @@ def stream_bloom(
         )
         write_batch(bits, batch_id, sink_dir)
 
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def bloom_reduce(df: DataFrame) -> DataFrame:
@@ -171,16 +159,8 @@ def stream_hll(
         )
         write_batch(sk, batch_id, sink_dir)
 
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def hll_reduce(df: DataFrame) -> DataFrame:
@@ -235,16 +215,8 @@ def stream_histogram(
         ).select("bucket", "n")
         write_batch(h, batch_id, sink_dir)
 
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def histogram_reduce(df: DataFrame) -> DataFrame:
@@ -289,16 +261,8 @@ def stream_kmv(
         ).select("h")
         write_batch(sk, batch_id, sink_dir)
 
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def kmv_reduce(df: DataFrame, k: int = 64) -> DataFrame:

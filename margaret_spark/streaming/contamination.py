@@ -8,7 +8,7 @@ Scale shape: the eval side is benchmarks — small by nature (the same
 premise as the batch ``operators.dedup.ngram_contamination``, which
 broadcasts it) — so its distinct-shingle universe is materialized
 once (eager ``localCheckpoint``) and broadcast-hash-probed inside
-each micro-batch; since r11 every gate here runs the BATCH operator's
+each micro-batch; every gate here runs the BATCH operator's
 whole-stage-codegen expression chain per micro-batch through
 ``foreachBatch`` (the ``stream_pii_redact`` shared-expression
 pattern) — zero Python-interpreter scoring on any at-ingest path, and
@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from margaret_spark.functions.shingling import char_shingles, word_shingles
 from margaret_spark.log import OffsetLog
+from margaret_spark.streaming.sinks import start_stream
 
 
 def stream_decontaminate(
@@ -49,16 +50,16 @@ def stream_decontaminate(
     decontamination gate wants (re-arm by restarting with the new
     benchmarks).
 
-    r11 (VERDICT r10 ask #2): the per-row Python ``for``/``sum``
-    shingle probe is GONE — each micro-batch runs the batch
-    operator's whole-stage-codegen chain (``dedup.ngram_contamination``
-    verbatim: id-repartition, one shingle explode, broadcast-hash
-    probe of the eval universe, one per-seq aggregation) through
-    ``foreachBatch``, the ``stream_pii_redact`` shared-expression
-    pattern. Zero Python-interpreter scoring at ingest; values are
-    the identical codegen expressions the batch oracle verifies, so
-    the sink stays hash-exact. Keepers land as ``batch=<id>``
-    partials (the house replay-idempotent delivery); read back with
+    There is no per-row Python ``for``/``sum`` shingle probe: each
+    micro-batch runs the batch operator's whole-stage-codegen chain
+    (``dedup.ngram_contamination`` verbatim: id-repartition, one
+    shingle explode, broadcast-hash probe of the eval universe, one
+    per-seq aggregation) through ``foreachBatch``, the
+    ``stream_pii_redact`` shared-expression pattern. Zero
+    Python-interpreter scoring at ingest; values are the identical
+    codegen expressions the batch oracle verifies, so the sink stays
+    hash-exact. Keepers land as ``batch=<id>`` partials (the house
+    replay-idempotent delivery); read back with
     ``read_keeper_sink(spark, sink_dir, "seq long, n_shingles int,
     n_matched long, contamination double")``."""
     from margaret_spark.functions.numeric import pround
@@ -116,16 +117,8 @@ def stream_decontaminate(
         write_batch(out, batch_id, sink_dir)
 
     src = log.stream_df()
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_decontaminate_spans(
@@ -146,18 +139,17 @@ def stream_decontaminate_spans(
     islands merge, same space-rejoined token rendering), so the sink
     is hash-exact against the batch SQL oracle.
 
-    r11 (VERDICT r10 ask #2): the per-row Python position loop is
-    GONE — each micro-batch runs the batch operator itself
-    (``dedup.cut_contaminated_spans``: positional-gram explode,
-    broadcast gram-hash probe, the islands merge window, one codegen
-    array filter) through ``foreachBatch``, so the hit rule, islands
-    merge and token rendering are the IDENTICAL whole-stage-codegen
-    expressions the batch SQL oracle verifies. The eval gram universe
-    is reduced to its distinct n-gram strings ONCE (eager
-    ``localCheckpoint``; each gram re-shingles to itself, so the
-    operator sees the same universe without rescanning the eval
-    corpus per batch). Zero Python-interpreter scoring at ingest.
-    Keepers land as ``batch=<id>`` partials; read back with
+    There is no per-row Python position loop: each micro-batch runs
+    the batch operator itself (``dedup.cut_contaminated_spans``:
+    positional-gram explode, broadcast gram-hash probe, the islands
+    merge window, one codegen array filter) through ``foreachBatch``,
+    so the hit rule, islands merge and token rendering are the
+    IDENTICAL whole-stage-codegen expressions the batch SQL oracle
+    verifies. The eval gram universe is reduced to its distinct n-gram
+    strings ONCE (eager ``localCheckpoint``; each gram re-shingles to
+    itself, so the operator sees the same universe without rescanning
+    the eval corpus per batch). Zero Python-interpreter scoring at
+    ingest. Keepers land as ``batch=<id>`` partials; read back with
     ``read_keeper_sink(spark, sink_dir, "seq long, clean_text
     string, n_tokens long, removed_tokens long")``."""
     from margaret_spark.operators.dedup import cut_contaminated_spans
@@ -184,16 +176,8 @@ def stream_decontaminate_spans(
         write_batch(out, batch_id, sink_dir)
 
     src = log.stream_df()
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_semantic_decontaminate(
@@ -265,7 +249,7 @@ def stream_semantic_decontaminate(
         .localCheckpoint(eager=True)
     )
 
-    # r11: the test side is bounded (the eval-split premise), so its
+    # the test side is bounded (the eval-split premise), so its
     # (cell, vector, norm) rows are collected ONCE per query and each
     # micro-batch scores through the cell-keyed matrix kernel
     # (semdedup._cell_threshold_hits_from_rows) — the per-batch plan
@@ -338,13 +322,5 @@ def stream_semantic_decontaminate(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)

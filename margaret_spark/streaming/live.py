@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from margaret_spark.log import OffsetLog
 from margaret_spark.observable import Observable
 from margaret_spark.qry import QuerySpec, build_plan
+from margaret_spark.streaming.sinks import start_stream
 
 
 class LiveTail:
@@ -175,11 +176,5 @@ def stream_build_index(
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_batch(batch_df)
 
-    w = src.writeStream.foreachBatch(on_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch)
+    return start_stream(w, checkpoint_dir, available_now)

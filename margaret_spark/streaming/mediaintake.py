@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 
 from margaret_spark.log import OffsetLog
+from margaret_spark.streaming.sinks import start_stream
 
 
 def stream_image_phash(
@@ -71,13 +72,5 @@ def stream_image_phash(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from margaret_spark.log import OffsetLog
+from margaret_spark.streaming.sinks import start_stream
 
 
 def stream_lm_filter(
@@ -78,16 +79,8 @@ def stream_lm_filter(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_nb_filter(
@@ -187,16 +180,8 @@ def stream_nb_filter(
         write_batch(kept.select("seq", "pred", "score"), batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_dsir_filter(
@@ -259,16 +244,8 @@ def stream_dsir_filter(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_gopher_filter(
@@ -322,13 +299,5 @@ def stream_gopher_filter(
         write_batch(kept, batch_id, sink_dir)
 
     src = log.stream_df(max_files_per_trigger=max_files_per_trigger)
-    w = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = src.writeStream.foreachBatch(on_batch).outputMode("append")
+    return start_stream(w, checkpoint_dir, available_now)

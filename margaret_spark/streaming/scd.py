@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from margaret_spark.functions.diff import scd2_merge
 from margaret_spark.log import OffsetLog
+from margaret_spark.streaming.sinks import start_stream
 
 _MANIFEST = "_versions.json"
 
@@ -201,10 +202,5 @@ def stream_scd2(
     w = (
         log.stream_df(max_files_per_trigger=max_files_per_trigger)
         .writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)

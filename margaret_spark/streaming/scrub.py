@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from margaret_spark.log import OffsetLog
 from margaret_spark.operators.pii import redact_expr as scrub_expr
+from margaret_spark.streaming.sinks import start_stream
 
 
 def stream_scrub_pii(
@@ -39,18 +40,13 @@ def stream_scrub_pii(
     checkpoint (file-source offsets + sink commit log). With
     ``available_now`` the call drains everything currently in the log
     and returns after the query terminates; otherwise the running
-    StreamingQuery is returned (500 ms trigger).
+    StreamingQuery is returned (see ``sinks.start_stream``).
     """
     src = log.stream_df()
     out = src.select(F.col("seq"), scrub_expr(text_expr).alias("redacted"))
     w = (
         out.writeStream.format("parquet")
         .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)

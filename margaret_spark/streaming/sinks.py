@@ -1,8 +1,14 @@
-"""Executor-side delivery for the stateful streaming keeper streams.
+"""How streams are driven, and executor-side delivery of their output.
 
-The six custom stateful operators (``streaming.stateful``) emit a
-KEEPER stream — first-seen documents, admitted budget rows, changed
-index entries, as-of matches. At 100 TB that stream is itself big
+:func:`start_stream` is the one place that decides how a checkpointed
+stream runs: it sets the checkpoint and either drains the source or
+starts the continuous trigger.
+
+The custom stateful operators (``streaming.stateful``) emit a KEEPER
+stream — first-seen documents, admitted budget rows, changed index
+entries, as-of matches, LSH candidates. Six of the seven deliver it
+through :func:`delivery`; ``stream_topk`` hands each output batch to
+its caller's ``on_batch_df`` instead. At 100 TB that stream is itself big
 data (``stream_dedup_exact`` emits one row per unique document ever
 ingested), so its default delivery path must be executor-side: each
 micro-batch's output is written as a parquet partition
@@ -67,8 +73,51 @@ from typing import Callable, Optional
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _MANIFEST = "_manifest.json"
+#: Trigger interval of a checkpointed stream started with
+#: ``available_now=False``.
+_TRIGGER_INTERVAL = "500 milliseconds"
+
+
+def start_stream(
+    writer: DataStreamWriter,
+    checkpoint_dir: Optional[str],
+    available_now: bool,
+) -> Optional[StreamingQuery]:
+    """Start a checkpointed stream: drain it or leave it running.
+
+    ``writer`` arrives with its sink (``foreachBatch(...)`` or a file
+    format plus ``path``) and its output mode already set; this sets
+    the checkpoint and the trigger.
+
+    - ``available_now=True`` — drain: one ``trigger(availableNow=True)``
+      run processes everything the source holds at start, possibly in
+      several micro-batches, and this call blocks until the query
+      terminates. Returns None. This is the catch-up / batch-rebuild
+      form.
+    - ``available_now=False`` — run: the query starts on a
+      processing-time trigger of ``_TRIGGER_INTERVAL`` and follows new
+      input until stopped. Returns the running ``StreamingQuery``; the
+      caller owns ``stop()``.
+
+    Either way the checkpoint is the resume cursor: offsets, the sink
+    commit log and any operator state live in ``checkpoint_dir``, so a
+    restart on the same directory continues exactly-once where the
+    last run committed. A None ``checkpoint_dir`` is rejected before
+    anything starts — passed through, it would reach the JVM as the
+    string ``"None"`` or an opaque py4j error, depending on version."""
+    if checkpoint_dir is None:
+        raise ValueError(
+            "checkpoint_dir is required: streaming offsets and state live "
+            "in the checkpoint — pass a fresh directory per logical stream"
+        )
+    w = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        w.trigger(availableNow=True).start().awaitTermination()
+        return None
+    return w.trigger(processingTime=_TRIGGER_INTERVAL).start()
 
 
 def _fs(spark: SparkSession, path: str):

@@ -37,21 +37,40 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from margaret_spark.log import OffsetLog
-from margaret_spark.streaming.sinks import delivery, read_batch_sink
+from margaret_spark.streaming.sinks import (
+    delivery,
+    read_batch_sink,
+    start_stream,
+)
 
 
-def _require_checkpoint(checkpoint_dir: Optional[str]) -> str:
-    """Fail fast with a real message: a None checkpoint reaches
-    ``writeStream.option(...)`` as the string ``"None"`` or an opaque
-    py4j error depending on version — never what the caller meant.
-    Stateful state lives IN the checkpoint, so it is always
-    required."""
-    if checkpoint_dir is None:
+def _with_state_ttl(fn, state_ttl: str | int | None, available_now: bool):
+    """(state function, ``GroupStateTimeout``) for an operator whose
+    idle keys may be evicted after ``state_ttl``. Without a TTL the
+    function is returned as is with no timeout. With one, the wrapper
+    re-arms the processing-time timeout after every call that leaves
+    state behind, so a key is evicted only once it has been idle for
+    ``state_ttl``; ``fn`` itself handles ``state.hasTimedOut``.
+
+    A TTL needs the continuous trigger: under ``availableNow`` Spark
+    keeps scheduling batches while processing-time timeouts are
+    armed, so the drain never terminates (measured, not just
+    theoretical). The combination is rejected here, before anything
+    is built."""
+    if state_ttl is None:
+        return fn, GroupStateTimeout.NoTimeout
+    if available_now:
         raise ValueError(
-            "checkpoint_dir is required: stateful streaming state lives in "
-            "the checkpoint — pass a fresh directory per logical stream"
+            "state_ttl needs a continuous trigger: pass available_now=False "
+            "(an availableNow drain never terminates while timeouts are armed)"
         )
-    return checkpoint_dir
+
+    def armed(key, pdfs, state):
+        yield from fn(key, pdfs, state)
+        if not state.hasTimedOut and state.exists:
+            state.setTimeoutDuration(state_ttl)
+
+    return armed, GroupStateTimeout.ProcessingTimeTimeout
 
 
 def _latest_func(
@@ -117,13 +136,8 @@ def stream_latest_index(
     w = (
         out.writeStream.foreachBatch(delivery(sink_dir, on_updates))
         .outputMode("update")
-        .option("checkpointLocation", _require_checkpoint(checkpoint_dir))
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def latest_index_reduce(df: DataFrame) -> DataFrame:
@@ -260,31 +274,15 @@ def stream_dedup_window(
     ``on_keepers`` pandas callback."""
     if ttl_seqs < 1:
         raise ValueError(f"ttl_seqs must be >= 1: {ttl_seqs}")
-    if state_ttl is not None and available_now:
-        raise ValueError(
-            "state_ttl needs a continuous trigger: pass available_now=False "
-            "(an availableNow drain never terminates while timeouts are armed)"
-        )
+    fn, timeout = _with_state_ttl(
+        _window_dedup_func_factory(ttl_seqs), state_ttl, available_now
+    )
     # max_files_per_trigger bounds catch-up batch size (a restart over
     # a long backlog should replay in bounded micro-batches, not one)
     src = log.stream_df(max_files_per_trigger)
     keyed = src.select(
         F.sha2(content_expr.cast("string"), 256).alias("content_hash"), F.col("seq")
     )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    fn = _window_dedup_func_factory(ttl_seqs)
-    if state_ttl is not None:
-        inner = fn
-
-        def fn(key, pdfs, state):  # arm/refresh the eviction clock
-            yield from inner(key, pdfs, state)
-            if not state.hasTimedOut and state.exists:
-                state.setTimeoutDuration(state_ttl)
-
     out = keyed.groupBy("content_hash").applyInPandasWithState(
         fn,
         outputStructType="content_hash string, keep_seq long",
@@ -295,13 +293,8 @@ def stream_dedup_window(
     w = (
         out.writeStream.foreachBatch(delivery(sink_dir, on_keepers))
         .outputMode("update")
-        .option("checkpointLocation", _require_checkpoint(checkpoint_dir))
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def _budget_func_factory(budget: int):
@@ -383,13 +376,8 @@ def stream_token_budget(
     w = (
         out.writeStream.foreachBatch(delivery(sink_dir, on_kept))
         .outputMode("append")
-        .option("checkpointLocation", _require_checkpoint(checkpoint_dir))
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def _band_collision_func(
@@ -470,11 +458,9 @@ def stream_dedup_minhash(
         raise ValueError(
             f"bands must divide num_hashes: bands={bands}, num_hashes={num_hashes}"
         )
-    if state_ttl is not None and available_now:
-        raise ValueError(
-            "state_ttl needs a continuous trigger: pass available_now=False "
-            "(an availableNow drain never terminates while timeouts are armed)"
-        )
+    fn, timeout = _with_state_ttl(
+        _band_collision_func, state_ttl, available_now
+    )
     from margaret_spark.functions.shingling import char_shingles, word_shingles
     from margaret_spark.functions.xxh import with_minhash_sigs
 
@@ -490,8 +476,8 @@ def stream_dedup_minhash(
     # num_hashes interpreted transform+array_min folds PER ROW (HOFs
     # do not codegen) and re-hashed every element once per
     # permutation; the kernel hashes each element once and folds the
-    # seeds over whole Arrow batches (r12, VERDICT r11 ask #4). Only
-    # (seq, __h) cross the Python boundary.
+    # seeds over whole Arrow batches. Only (seq, __h) cross the Python
+    # boundary.
     src = with_minhash_sigs(
         src.select("seq", "__h"), "__h", "__sig", num_hashes
     )
@@ -512,17 +498,6 @@ def stream_dedup_minhash(
     banded = src.withColumn("__bands", F.array(*band_hashes)).select(
         F.col("seq"), F.posexplode("__bands").alias("band", "bucket")
     )
-    fn = _band_collision_func
-    timeout = GroupStateTimeout.NoTimeout
-    if state_ttl is not None:
-        timeout = GroupStateTimeout.ProcessingTimeTimeout
-        inner = fn
-
-        def fn(key, pdfs, state):  # arm/refresh the eviction clock
-            yield from inner(key, pdfs, state)
-            if not state.hasTimedOut and state.exists:
-                state.setTimeoutDuration(state_ttl)
-
     out = banded.groupBy("band", "bucket").applyInPandasWithState(
         fn,
         outputStructType="dup_seq long, band int, keep_seq long",
@@ -533,13 +508,8 @@ def stream_dedup_minhash(
     w = (
         out.writeStream.foreachBatch(delivery(sink_dir, on_candidates))
         .outputMode("update")
-        .option("checkpointLocation", _require_checkpoint(checkpoint_dir))
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def stream_dedup_exact(
@@ -585,13 +555,8 @@ def stream_dedup_exact(
     w = (
         out.writeStream.foreachBatch(delivery(sink_dir, on_keepers))
         .outputMode("update")
-        .option("checkpointLocation", _require_checkpoint(checkpoint_dir))
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def _asof_func_factory(history_horizon: int | None):
@@ -703,13 +668,8 @@ def stream_asof_join(
     w = (
         out.writeStream.foreachBatch(delivery(sink_dir, on_rows))
         .outputMode("append")
-        .option("checkpointLocation", _require_checkpoint(checkpoint_dir))
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)
 
 
 def _topk_func_factory(k: int):
@@ -787,13 +747,5 @@ def stream_topk(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    w = (
-        out.writeStream.foreachBatch(on_batch_df)
-        .outputMode("update")
-        .option("checkpointLocation", _require_checkpoint(checkpoint_dir))
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    w = out.writeStream.foreachBatch(on_batch_df).outputMode("update")
+    return start_stream(w, checkpoint_dir, available_now)

@@ -28,6 +28,7 @@ from margaret_spark.operators.web import (
     url_host,
     with_registered_domain_psl,
 )
+from margaret_spark.streaming.sinks import start_stream
 
 
 def stream_web_filter(
@@ -72,11 +73,6 @@ def stream_web_filter(
     w = (
         out.writeStream.format("parquet")
         .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return w.trigger(processingTime="500 milliseconds").start()
+    return start_stream(w, checkpoint_dir, available_now)

@@ -646,6 +646,22 @@ def test_minhash_sigs_kernel_matches_jvm(spark):
     assert got == want
 
 
+def test_minhash_sigs_reject_null_elements():
+    """Arrow hands an array<long> row holding a NULL element to pandas
+    as float64 with NaN; the kernel must reject it by column name, not
+    cast NaN to -2**63 and hash a fake element. NULL-free float rows
+    still hash like their int64 twins."""
+    import numpy as np
+
+    from margaret_spark.functions.xxh import _sig_lists
+
+    with pytest.raises(ValueError, match="__h: NULL array element"):
+        _sig_lists([np.array([1, 2]), np.array([1.0, np.nan, 3.0])], 4, "__h")
+    assert _sig_lists([np.array([1.0, 3.0]), None], 4, "__h") == _sig_lists(
+        [np.array([1, 3]), None], 4, "__h"
+    )
+
+
 def test_stream_dedup_minhash_collides_near_dups(spark, tmp_path):
     """Streaming LSH dedup: a near-duplicate arriving later collides
     with the first doc's banded buckets; unrelated text claims its own
@@ -1655,20 +1671,25 @@ def test_stream_histogram_merged_equals_batch(spark, tmp_path):
 def test_stateful_ops_require_checkpoint_dir(spark, tmp_path):
     """checkpoint_dir=None must fail with a clear ValueError before
     any stream starts, not an opaque py4j error from
-    checkpointLocation=None (r6 ADVICE)."""
+    checkpointLocation=None — for stateful and stateless operators
+    alike."""
     import pytest
 
     from pyspark.sql import types as T
 
     from margaret_spark.log import OffsetLog
-    from margaret_spark.streaming import stream_dedup_exact
+    from margaret_spark.streaming import stream_cms, stream_dedup_exact
 
     log = OffsetLog(spark, str(tmp_path / "log"), value_type=T.StringType())
     log.append("x")
-    with pytest.raises(ValueError, match="checkpoint_dir is required"):
-        stream_dedup_exact(
-            log, F.col("value"), sink_dir=str(tmp_path / "sink")
-        )
+    sink = str(tmp_path / "sink")
+    for start in (
+        lambda: stream_dedup_exact(log, F.col("value"), sink_dir=sink),
+        lambda: stream_cms(log, F.col("value"), sink, None),
+    ):
+        with pytest.raises(ValueError, match="checkpoint_dir is required"):
+            start()
+        assert not spark.streams.active
 
 
 def test_stream_pq_assign_matches_batch_encode_and_resumes(spark, tmp_path):
@@ -2028,3 +2049,24 @@ def test_stream_semantic_decontaminate_matches_batch(spark, tmp_path):
     flagged = {d for d, _, c in got if c}
     assert 4 in flagged  # the exact copy
     assert not any(d == 3 for d, _, _ in got)  # zero vector dropped
+
+
+def test_streams_are_started_only_by_start_stream():
+    """Every checkpointed stream is driven through
+    ``streaming.sinks.start_stream``: no other library module drains
+    with ``trigger(availableNow...)`` or blocks on
+    ``awaitTermination(``."""
+    import pathlib
+
+    import margaret_spark
+
+    root = pathlib.Path(margaret_spark.__file__).parent
+    helper = root / "streaming" / "sinks.py"
+    offenders = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        if p != helper
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "awaitTermination(" in line or "trigger(availableNow" in line
+    ]
+    assert not offenders, offenders
