@@ -224,10 +224,15 @@ def _run_scan_factory(
     whose so-far length is 1 at the end of a batch defers exactly that
     one row (O(1) carry — the moment a second member arrives the whole
     run is flagged True and emitted eagerly; at generator end the
-    deferred row flushes False)."""
+    deferred row flushes False).
+
+    Keys must be non-null and non-NaN (NaN never equals itself, so a
+    NaN class would split into singleton runs): the scan raises a
+    ValueError naming the key columns."""
 
     def _scan(batches):
         import numpy as np
+        import pandas as pd
 
         prev_key = None  # full key of the last row seen
         run_start = 0  # partition-global row idx of the open run's start
@@ -239,6 +244,8 @@ def _run_scan_factory(
             if m == 0:
                 continue
             karr = pdf[keys].to_numpy()
+            if pd.isna(karr).any():
+                raise ValueError(f"run scan: null or NaN key in columns {keys}")
             idx = np.arange(m)
             chg = np.empty(m, dtype=bool)
             if m > 1:

@@ -10,9 +10,7 @@ Two backends, mirroring the reference's two:
 - :class:`OffsetLog` — Parquet-directory log (reference ``offset2/``).
   The write path is a driver-side single-writer appender (the
   reference serializes appends under a mutex too,
-  ``offset2/log.go:431``) that emits seq-range-named Parquet files;
-  the read path is a full Spark DataFrame, so every query benefits
-  from Catalyst filter pushdown / column pruning / TakeOrdered.
+  ``offset2/log.go:431``) that emits seq-range-named Parquet files.
 
 Physical layout of an OffsetLog (replacing the reference's
 ``data``/``ofst``/``jrnl`` triple, ``offset2/log.go:5-27``)::
@@ -21,28 +19,49 @@ Physical layout of an OffsetLog (replacing the reference's
     <path>/data/part-<first>-<last>.parquet   # columns: seq, value
     <path>/patch/patch-<id>.parquet     # columns: patch_id, seq, op, value
 
-The seq range embedded in each data file name plays the role of the
-reference's ``ofst`` positional index: a point ``get`` binary-searches
-the file list driver-side and reads one file — O(1) in data size —
-while Spark-side queries get the same effect from Parquet row-group
-min/max statistics on ``seq``. The highest ``last`` across file names
-plays the role of the ``jrnl`` journal.
+The seq range embedded in each data entry name plays the role of the
+reference's ``ofst`` positional index, and the highest ``last`` across
+names plays the role of the ``jrnl`` journal. An entry is one file, or
+a directory of part files for a bulk :meth:`OffsetLog.append_df`.
+
+``get``, pull ``query`` and building ``df`` / ``query_df`` start no
+Spark job; they cost directory listings and file reads:
+
+- Point ``get`` and pull ``query`` (behind index builders and live
+  tails) run on the driver like the reference's cursor
+  (``offset2/qry.go``): one listing of ``data/`` picks the entries
+  whose seq range overlaps the query's bounds; they are read with
+  pyarrow in seq order (reversed for ``Reverse``), one file at a time,
+  with the seq bounds pushed into each read, until ``Limit`` is met.
+- ``df`` / ``query_df`` hand Spark the data directory as ONE root, so
+  Spark lists it on the driver (an explicit list of more than
+  ``parallelPartitionDiscovery.threshold`` paths would be listed by a
+  distributed job), and Catalyst keeps filter pushdown, column pruning
+  and TakeOrdered.
+
+A compaction publishes its merged entry before it deletes the inputs;
+an entry whose seq range lies strictly inside a wider entry's range is
+such a dead input, and every read skips it (:func:`_supersede`). The
+Spark read applies that rule to the listing Spark itself made, so no
+entry can be published between the listing and the rule.
 
 Null/Replace are implemented as an *overlay*: patches are appended to
 ``patch/`` and merged at read with latest-patch-wins semantics
 (reference mutates frames in place, ``offset2/log.go:91-160``; an
 overlay is the append-friendly equivalent and needs no size limit on
-replacements).
+replacements). A driver-side read reads ``patch/`` once per call.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import threading
 import time
 from abc import ABC, abstractmethod
 from typing import Any, Iterable, Iterator, Optional
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -283,6 +302,31 @@ class MemLog(Log):
 # ---------------------------------------------------------------------------
 
 
+def _supersede(entries: list[tuple]) -> list[tuple]:
+    """The live entries of a data listing, sorted by seq range.
+
+    Each entry is ``(first, last, ...)``. The supersede rule: an entry
+    whose seq range lies strictly inside a WIDER entry's range is a
+    compaction input whose merged replacement has been published, so
+    it is dead. This is what makes compaction crash-safe: the merged
+    entry is renamed into place FIRST and the inputs are deleted
+    after; a crash in between leaves dead inputs that readers (and
+    ``_recover_seq``) skip, and the janitor removes on the next open.
+
+    One sweep in ``(first, -last)`` order: every entry that can contain
+    an entry comes before it, so the entry is dead iff an earlier one
+    ends past it, or ends where it ends but starts before it."""
+    out = []
+    reach, reach_first = -1, 0  # widest `last` so far, and its entry's `first`
+    for e in sorted(entries, key=lambda e: (e[0], -e[1])):
+        first, last = e[0], e[1]
+        if not (reach > last or (reach == last and reach_first < first)):
+            out.append(e)
+        if last > reach:
+            reach, reach_first = last, first
+    return out
+
+
 def _spark_to_arrow_schema(value_type: T.DataType):
     import pyarrow as pa
 
@@ -355,48 +399,36 @@ class OffsetLog(Log):
 
     # -- file bookkeeping (the jrnl/ofst analog) ---------------------------
 
+    def _entry(self, name: str) -> tuple[int, int, str]:
+        """``(first, last, path)`` of the data entry ``name``."""
+        parts = name[: -len(".parquet")].split("-")
+        if (
+            not name.endswith(".parquet")
+            or len(parts) != 3
+            or parts[0] != "part"
+            or not parts[1].isdigit()
+            or not parts[2].isdigit()
+        ):
+            # LOUD with the path named: a foreign *.parquet here
+            # would otherwise crash with a bare int() error — or
+            # worse, parse as a bogus seq range and corrupt
+            # _recover_seq / the point-lookup index
+            raise ValueError(
+                f"foreign entry in log data dir: {self._data_dir}/{name}"
+                " — the name must be part-<first>-<last>.parquet; "
+                "move or delete it (the seq index refuses to guess)"
+            )
+        return int(parts[1]), int(parts[2]), os.path.join(self._data_dir, name)
+
     def _data_files(self) -> list[tuple[int, int, str]]:
-        out = []
-        for name in os.listdir(self._data_dir):
-            if not name.endswith(".parquet"):
-                continue
-            stem = name[: -len(".parquet")]
-            parts = stem.split("-")
-            if (
-                len(parts) != 3
-                or parts[0] != "part"
-                or not parts[1].isdigit()
-                or not parts[2].isdigit()
-            ):
-                # LOUD with the path named: a foreign *.parquet here
-                # would otherwise crash with a bare int() error — or
-                # worse, parse as a bogus seq range and corrupt
-                # _recover_seq / the point-lookup index
-                raise ValueError(
-                    f"foreign entry in log data dir: {self._data_dir}/{name}"
-                    " — the name must be part-<first>-<last>.parquet; "
-                    "move or delete it (the seq index refuses to guess)"
-                )
-            out.append((int(parts[1]), int(parts[2]), os.path.join(self._data_dir, name)))
-        out.sort()
-        # supersede rule: a file whose seq range is strictly contained
-        # in a LARGER file's range is a compaction input whose merged
-        # replacement has been published — ignore it. This is what
-        # makes compaction crash-safe: the merged file is renamed into
-        # place FIRST and the inputs deleted after; a crash in between
-        # leaves dead inputs that readers (and _recover_seq) skip, and
-        # the janitor removes on the next open.
-        if len(out) > 1:
-            kept = []
-            for lo, hi, p in out:
-                covered = any(
-                    Lo <= lo and hi <= Hi and (Hi - Lo) > (hi - lo)
-                    for Lo, Hi, _ in out
-                )
-                if not covered:
-                    kept.append((lo, hi, p))
-            out = kept
-        return out
+        """The live data entries in seq order, from one listing."""
+        return _supersede(
+            [
+                self._entry(name)
+                for name in os.listdir(self._data_dir)
+                if name.endswith(".parquet")
+            ]
+        )
 
     def _cleanup_superseded(self) -> None:
         """Remove compaction inputs left behind by a crash between the
@@ -406,7 +438,6 @@ class OffsetLog(Log):
         left behind — none of them are visible to readers, but they
         accumulate disk forever otherwise."""
         import shutil
-        import time
 
         self._complete_interrupted_swaps()
         live = {p for _lo, _hi, p in self._data_files()}
@@ -440,9 +471,6 @@ class OffsetLog(Log):
         # writer can still be filling them (another handle may be
         # mid-append_df when this one opens — single-writer is the
         # CONTRACT, but a reader open must never sabotage a writer)
-        import time
-
-        horizon = time.time() - 3600
         for stale in ("_staging", "_compact_staging", "_compact_staging_patch"):
             root = os.path.join(self.path, stale)
             if not os.path.isdir(root):
@@ -686,29 +714,48 @@ class OffsetLog(Log):
     def seq(self) -> int:
         return self._seq
 
-    def _base_df(self) -> DataFrame:
-        schema = T.StructType(
+    def _schema(self) -> T.StructType:
+        return T.StructType(
             [
                 T.StructField("seq", T.LongType(), False),
                 T.StructField("value", self.value_type, True),
             ]
         )
-        # Read the EXPLICIT live file list (the supersede rule filters
-        # dead compaction inputs a crash may have left), not the whole
-        # directory. recursiveFileLookup: append_df publishes a
-        # DIRECTORY of part files per bulk load; without it, mixing
-        # single appends (depth-1 files) with bulk loads (depth-2
-        # leaves) makes Spark's partition discovery reject the log
-        # ("conflicting directory structures").
-        files = [p for _lo, _hi, p in self._data_files()]
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return (
-            self.spark.read.schema(schema)
+
+    def _base_df(self) -> DataFrame:
+        # The data directory is ONE root, so Spark lists it on the
+        # driver; handing it the entries as explicit paths would start
+        # a distributed listing job past 32 paths.
+        # recursiveFileLookup: append_df publishes a DIRECTORY of part
+        # files per bulk load; without it, mixing single appends
+        # (depth-1 files) with bulk loads (depth-2 leaves) makes
+        # Spark's partition discovery reject the log ("conflicting
+        # directory structures").
+        root = os.path.abspath(self._data_dir)
+        df = (
+            self.spark.read.schema(self._schema())
             .option("pathGlobFilter", "*.parquet")
             .option("recursiveFileLookup", "true")
-            .parquet(*files)
+            .parquet(root)
         )
+        # The supersede rule, applied to the listing Spark made: a
+        # merged entry published since any earlier listing is in it.
+        leaves: dict[str, list[str]] = {}
+        # one py4j call for the whole listing (iterating the Java array
+        # costs two calls per file); a URI encodes any newline
+        listed = self.spark._jvm.org.apache.hadoop.util.StringUtils.join(
+            "\n", df._jdf.inputFiles()
+        )
+        for uri in filter(None, listed.split("\n")):
+            rel = os.path.relpath(unquote(urlparse(uri).path), root)
+            leaves.setdefault(rel.split(os.sep)[0], []).append(uri)
+        live = {os.path.basename(e[2]) for e in _supersede([self._entry(n) for n in leaves])}
+        dead = [re.sub(_SCHEME, "", u) for n, uris in leaves.items() if n not in live for u in uris]
+        if dead:
+            # dead compaction inputs a crash left: excluded in this read
+            path = F.regexp_replace(F.col("_metadata.file_path"), _SCHEME, "")
+            df = df.where(~path.isin(dead))
+        return df
 
     def stream_df(self, max_files_per_trigger: int | None = None) -> DataFrame:
         """The log as a streaming DataFrame (file source): catch-up
@@ -721,7 +768,7 @@ class OffsetLog(Log):
         # files per bulk load (distributed write); the stream must
         # discover those leaves like the batch reader does.
         reader = (
-            self.spark.readStream.schema(self._base_df().schema)
+            self.spark.readStream.schema(self._schema())
             .option("pathGlobFilter", "*.parquet")
             .option("recursiveFileLookup", "true")
         )
@@ -784,15 +831,52 @@ class OffsetLog(Log):
             )
         )
 
-    def _decode_value(self, row) -> Any:
-        if row["nulled"]:
-            return ErrNulled()
-        v = row["value"]
-        if self.codec is not None:
-            return self.codec.unmarshal(v)
-        if hasattr(v, "asDict"):
-            return v.asDict(recursive=True)
-        return v
+    def _decode(self, stored: Any, patch: tuple[str, Any] | None) -> Any:
+        """The value a driver-side read returns for one stored entry and
+        its latest patch: ErrNulled() for a nulled entry, else the
+        stored or replaced value with the codec undone."""
+        if patch is not None:
+            op, pvalue = patch
+            if op == "null":
+                return ErrNulled()
+            stored = pvalue
+        return self.codec.unmarshal(stored) if self.codec is not None else stored
+
+    def _patches(self, lo: int, hi: int) -> dict[int, tuple[str, Any]]:
+        """``seq -> (op, value)`` of the latest patch of each seq in
+        ``[lo, hi]``, from one read of ``patch/``."""
+        if not self._has_patches():
+            return {}
+        rows = []
+        for name in os.listdir(self._patch_dir):
+            if name.startswith("patch-") and name.endswith(".parquet"):
+                t = _read_seq_range(os.path.join(self._patch_dir, name), lo, hi)
+                if t is not None:
+                    rows += zip(*(t.column(c).to_pylist() for c in ("patch_id", "seq", "op", "value")))
+        rows.sort(key=lambda r: r[0])
+        return {s: (op, v) for _pid, s, op, v in rows}
+
+    @staticmethod
+    def _entry_rows(path: str, lo: int, hi: int, reverse: bool = False):
+        """``(seq, stored value)`` of one data entry's rows with
+        ``lo <= seq <= hi``, in seq order (descending if ``reverse``).
+        A bulk entry is a directory of Parquet files, each holding one
+        contiguous seq range; they are ordered by their seq statistics
+        and read one at a time, so one file is in memory at a time."""
+        if os.path.isdir(path):
+            leaves = [
+                os.path.join(path, n)
+                for n in os.listdir(path)
+                if n.endswith(".parquet") and not n.startswith((".", "_"))
+            ]
+            leaves.sort(key=_first_seq)
+        else:
+            leaves = [path]
+        for leaf in reversed(leaves) if reverse else leaves:
+            t = _read_seq_range(leaf, lo, hi)
+            if t is not None:
+                t = t.sort_by([("seq", "descending" if reverse else "ascending")])
+                yield from zip(t.column("seq").to_pylist(), t.column("value").to_pylist())
 
     def get(self, seq: int) -> Any:
         """Driver-side O(1) point lookup via the filename seq index —
@@ -806,45 +890,89 @@ class OffsetLog(Log):
         i = bisect.bisect_right([f[0] for f in files], seq) - 1
         first, last, fpath = files[i]
         assert first <= seq <= last, "filename index out of sync"
-        # push the point filter into the scan: one part may hold
-        # millions of rows (a bulk append_df batch directory, or the
-        # whole log after compact_small_files merges it into one file)
-        # — row-group seq statistics prune to ~one row group, instead
-        # of materializing the entire part for one row
-        import pyarrow.dataset as pads
-
-        rows = (
-            pads.dataset(fpath, format="parquet")
-            .to_table(filter=pads.field("seq") == seq)
-            .to_pylist()
-        )
-        assert len(rows) == 1, "filename index out of sync"
-        row = rows[0]
-        assert row["seq"] == seq
-        value, nulled = row["value"], False
-        if self._has_patches():
-            op, pval = self._latest_patch(seq)
-            if op == "null":
-                raise ErrNulled()
-            if op == "replace":
-                value = pval
-        if self.codec is not None:
-            return self.codec.unmarshal(value)
+        # the point filter is pushed into the read: one entry may hold
+        # millions of rows (a bulk append_df directory, or the whole
+        # log after compaction merged it into one file)
+        rows = list(self._entry_rows(fpath, seq, seq))
+        assert len(rows) == 1 and rows[0][0] == seq, "filename index out of sync"
+        value = self._decode(rows[0][1], self._patches(seq, seq).get(seq))
+        if isinstance(value, ErrNulled):
+            raise value
         return value
 
-    def _latest_patch(self, seq: int):
-        import pyarrow.parquet as pq
-        import pyarrow.dataset as ds
-
-        dataset = ds.dataset(self._patch_dir, format="parquet")
-        tbl = dataset.to_table(filter=ds.field("seq") == seq).to_pylist()
-        if not tbl:
-            return None, None
-        best = max(tbl, key=lambda r: r["patch_id"])
-        return best["op"], best["value"]
-
     def _batch_iter(self, plan: QueryPlan) -> Iterator[Any]:
-        df = apply_plan(self.df(), plan, ordered=True)
-        for row in df.toLocalIterator():
-            v = self._decode_value(row)
-            yield (row["seq"], v) if plan.seqwrap else v
+        """The reference's cursor (``offset2/qry.go:101-189``) over the
+        filename seq index: the entries overlapping the plan's bounds,
+        read in seq order from one snapshot of the log."""
+        hi = self._seq
+        if plan.lt is not None:
+            hi = min(hi, plan.lt - 1)
+        if plan.lte is not None:
+            hi = min(hi, plan.lte)
+        lo = max(0, plan.gt + 1 if plan.gt is not None else plan.gte or 0)
+        left = plan.limit
+        if lo > hi or left == 0:
+            return
+        files = [f for f in self._data_files() if f[0] <= hi and f[1] >= lo]
+        patches = self._patches(lo, hi)
+        for _first, _last, path in reversed(files) if plan.reverse else files:
+            for s, stored in self._entry_rows(path, lo, hi, plan.reverse):
+                v = self._decode(stored, patches.get(s))
+                yield (s, v) if plan.seqwrap else v
+                if left is not None:
+                    left -= 1
+                    if left == 0:
+                        return
+
+
+def _first_seq(path: str) -> float:
+    """The lowest ``seq`` in the Parquet file ``path``, from its footer."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    return min(
+        (_group_seq_range(md.row_group(i))[0] for i in range(md.num_row_groups)),
+        default=float("inf"),
+    )
+
+
+def _group_seq_range(rg) -> tuple[float, float]:
+    """``(min, max)`` of a row group's ``seq`` column from its
+    statistics; unbounded where they are missing."""
+    for k in range(rg.num_columns):
+        col = rg.column(k)
+        if col.path_in_schema == "seq":
+            st = col.statistics
+            if st is not None and st.has_min_max:
+                return st.min, st.max
+    return float("-inf"), float("inf")
+
+
+def _read_seq_range(path: str, lo: int, hi: int):
+    """The rows of the Parquet file ``path`` with ``lo <= seq <= hi``
+    (None when none can be there): row groups outside the range are
+    skipped by their ``seq`` statistics, the rest filtered."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(path) as pf:
+        groups, inside = [], True
+        for i in range(pf.metadata.num_row_groups):
+            a, b = _group_seq_range(pf.metadata.row_group(i))
+            if a <= hi and b >= lo:
+                groups.append(i)
+                inside = inside and lo <= a and b <= hi
+        if not groups:
+            return None
+        t = pf.read_row_groups(groups)
+    if not inside:
+        s = t.column("seq")
+        t = t.filter(pc.and_(pc.greater_equal(s, lo), pc.less_equal(s, hi)))
+    return t
+
+
+#: URI scheme and authority slashes, stripped from both sides when
+#: Spark's listing is matched against ``_metadata.file_path`` (one
+#: spells a local file ``file:///p``, the other ``file:/p``)
+_SCHEME = r"^[A-Za-z][A-Za-z0-9+.-]*:/*"
+

@@ -227,6 +227,23 @@ def test_first_index_and_class_rank_semantics(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+@pytest.mark.parametrize("bad", [None, float("nan")])
+def test_run_scan_rejects_null_and_nan_keys(bad):
+    """The sorted-partition run scan compares neighbouring keys, and
+    NaN never equals itself: a null/NaN key class would split into
+    singleton runs. The scan rejects it, naming the key columns."""
+    import pandas as pd
+
+    from margaret_spark.functions.seqassign import _run_scan_factory
+
+    scan = _run_scan_factory(["a", "b"], "r", "u", False)
+    ok = pd.DataFrame({"a": [1.0, 1.0, 2.0], "b": [0, 0, 1]})
+    assert [len(p) for p in scan(iter([ok]))] == [2, 1]
+    batches = [ok, pd.DataFrame({"a": [2.0, bad, bad], "b": [1, 1, 1]})]
+    with pytest.raises(ValueError, match=r"null or NaN key in columns \['a', 'b'\]"):
+        list(scan(iter(batches)))
+
+
 def test_bucket_exchange_dense_rank_equivalence(spark):
     """The arithmetic-bucket exchange (seqassign._bucket_exchange)
     must reproduce the range partitioner's dense ranks exactly:
